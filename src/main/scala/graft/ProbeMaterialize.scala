@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, MapType}
 
@@ -23,9 +23,6 @@ import org.apache.spark.sql.types.{DecimalType, MapType}
   * multiplicity and ignores row count entirely (r8 ADVICE), so the
   * determinism check also compares the multiplicity-sensitive sum and the
   * count.
-  *
-  * `main`: dev probe — time a named registry query with this action.
-  * Usage: runMain graft.ProbeMaterialize <queryName> [sfDir]
   */
 object ProbeMaterialize {
 
@@ -52,44 +49,5 @@ object ProbeMaterialize {
     val r = wrap(df).head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
       if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2)))
-  }
-
-  def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.preflight(spark, sfDir)
-    // session warm-up against whichever table the (possibly partial)
-    // probe corpus actually has
-    val fs = new org.apache.hadoop.fs.Path(sfDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Tables.names.find(n =>
-      fs.exists(new org.apache.hadoop.fs.Path(Tables.path(sfDir, n))))
-      .foreach(n => spark.read.parquet(Tables.path(sfDir, n)).count())
-    def once(): (Double, (Long, Long, BigDecimal)) = {
-      // t0 BEFORE the query fn, matching Bench: streaming queries run
-      // their stream (and e.g. IVF its driver-side prep) inside the fn,
-      // and stamping after it would exclude that work from the probe
-      val t0 = System.nanoTime()
-      val c = checksum(SparkEntry.queries(name)(spark, sfDir))
-      ((System.nanoTime() - t0) / 1e9, c)
-    }
-    val (t1, c1) = once()
-    val (t2, c2) = once()
-    require(c1 == c2,
-      s"nondeterministic result: (rows, xor, sum) $c1 != $c2")
-    println(f"[probe] $name materialized in ${math.min(t1, t2)}%.2f s " +
-      f"(runs $t1%.2f/$t2%.2f, rows ${c1._1}, checksum ${c1._2}) at $sfDir")
-    spark.stop()
   }
 }

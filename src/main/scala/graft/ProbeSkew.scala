@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -50,17 +50,7 @@ object ProbeSkew {
     require(aspects.subsetOf(knownAspects),
       s"unknown aspects ${aspects -- knownAspects} — known: " +
         knownAspects.toSeq.sorted.mkString(","))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Tables.preflight(spark, dir)
 
     val docs = Tables.load(spark, dir, "documents")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench tooling (like [[ProbeStreamJoin]]): measure the streaming dedup
   * family's state-store trade-offs at probe scale — heap provider vs
   * RocksDB vs RocksDB with changelog checkpointing, and corpus-lifetime
@@ -24,32 +22,18 @@ object ProbeStreamDedup {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mode = if (args.length > 1) args(1) else "heap"
     val variant = if (args.length > 2) args(2) else "lifetime"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val ckptBase = Scratch.tempDir("graft_dedup_ckpt_")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .config("spark.sql.streaming.checkpointLocation", ckptBase)
-    mode match {
-      case "heap" => ()
-      case "rocksdb" =>
-        b.config("spark.sql.streaming.stateStore.providerClass",
-          streaming.Streams.RocksDbProvider)
-      case "rocksdb-changelog" =>
-        b.config("spark.sql.streaming.stateStore.providerClass",
-          streaming.Streams.RocksDbProvider)
-        b.config(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
+    val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+      streaming.Streams.RocksDbProvider
+    val provider = mode match {
+      case "heap" => Nil
+      case "rocksdb" => Seq(rocksDb)
+      case "rocksdb-changelog" => Seq(rocksDb,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
       case other => sys.error(s"unknown mode $other")
     }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(
+      ("spark.sql.streaming.checkpointLocation" -> ckptBase) +: provider: _*)
     // surface the state observation regardless of log4j config
     val stateLines = scala.collection.mutable.ArrayBuffer.empty[String]
     StructuredLog.addListener((_, l) =>

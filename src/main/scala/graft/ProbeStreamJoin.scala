@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Bench tooling (like [[ScaleData]]/[[Explain]]): time the stream-stream
+/** Bench tooling (like [[ScaleData]]/[[ProbeLayout]]): time the stream-stream
   * interval join through its PRODUCTION sink — the distributed parquet
   * path of [[graft.streaming.Streams.purchaseAttributionToParquet]] — on
   * corpora whose join output is too large for any driver-collected sink.
@@ -23,19 +21,7 @@ object ProbeStreamJoin {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outer = args.length > 1 && args(1) == "outer"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation",
-        Scratch.streamingCheckpointBase())
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        Scratch.localCheckpointFileManager)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // surface the state observation regardless of log4j config
     StructuredLog.addListener((_, l) =>
       if (l.startsWith("event=stream_stream_join")) System.err.println(l))

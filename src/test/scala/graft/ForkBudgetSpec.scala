@@ -20,6 +20,12 @@ package graft
   * its count two orders of magnitude larger — a 4× separation threshold
   * is safe against any plausible background. An absolute ceiling on the
   * Nio side pins the batch floor itself.
+  *
+  * Each side is measured over several trials and judged by its MINIMUM:
+  * ambient forks only ever add to the system-wide counter, so the
+  * per-side minimum is the trial least polluted by other processes. A
+  * single trial per side went red under ambient load without
+  * any change to the checkpoint path.
   */
 class ForkBudgetSpec extends SparkSpec {
 
@@ -51,14 +57,17 @@ class ForkBudgetSpec extends SparkSpec {
     assert(spark.conf.get(managerKey) == Scratch.localCheckpointFileManager,
       "test session must ship the Nio manager")
     runStream() // warm-up: classloading/codegen forks land here
-    val n0 = forksNow(); runStream()
-    val nioForks = forksNow() - n0
+    def trials(): Seq[Long] = Seq.fill(3) {
+      val n0 = forksNow(); runStream()
+      forksNow() - n0
+    }
+    val nioTrials = trials()
     spark.conf.set(managerKey, fileContextManager)
-    val defForks = try {
-      val d0 = forksNow(); runStream()
-      forksNow() - d0
-    } finally spark.conf.set(managerKey, Scratch.localCheckpointFileManager)
-    info(s"forks: nio=$nioForks fileContext=$defForks")
+    val defTrials = try trials()
+      finally spark.conf.set(managerKey, Scratch.localCheckpointFileManager)
+    val (nioForks, defForks) = (nioTrials.min, defTrials.min)
+    info(s"forks per trial: nio=${nioTrials.mkString(",")} " +
+      s"fileContext=${defTrials.mkString(",")}")
     assert(defForks > nioForks * 4 && defForks > 400,
       s"guard lost its teeth: the FileContext manager should fork per " +
         s"stat (nio=$nioForks, fileContext=$defForks) — if this fails " +

@@ -123,4 +123,19 @@ class RunnerResilienceSpec extends SparkSpec {
       sleep = ms => { now += ms; Files.createFile(Paths.get(target)) })
     assert(ok)
   }
+
+  test("Probe: a k=v override without '=' fails; ns timing metrics convert to ms") {
+    assert(Probe.parseOverride("spark.sql.adaptive.enabled=false") ==
+      ("spark.sql.adaptive.enabled" -> "false"))
+    assert(Probe.parseOverride("k=a=b") == ("k" -> "a=b"))
+    Seq("spark.sql.adaptive.enabled", "=false").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Probe.parseOverride(bad))
+      assert(e.getMessage.contains(s"bad override '$bad'"), e.getMessage)
+    }
+    import org.apache.spark.sql.execution.metric.SQLMetric
+    def metric(kind: String, v: Long) = { val m = new SQLMetric(kind, 0L); m.set(v); m }
+    assert(Probe.metricMs(metric("nsTiming", 2500000L)) == Some(2.5))
+    assert(Probe.metricMs(metric("timing", 7L)) == Some(7.0))
+    assert(Probe.metricMs(metric("sum", 7L)).isEmpty)
+  }
 }
